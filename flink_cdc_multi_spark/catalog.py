@@ -312,6 +312,22 @@ class TableRegistry:
         sdb, stbl = self.mapped_names(db, tbl)
         return self.specs.get(f"{sdb}.{stbl}")
 
+    def source_identities(self, spec: TableSpec) -> list[tuple[str, str]]:
+        """Every envelope (db, tbl) that mapped_names() routes to ``spec`` —
+        the inverse of the name maps over their configured entries. A
+        database.name.map that merges shards gives one spec several
+        identities; a spec whose own name is mapped away has none."""
+        target = (sanitize(spec.db), sanitize(spec.table))
+        dbs = {target[0], *self.database_name_map}
+        tbls = {target[1]}
+        for key in self.table_name_map:
+            kdb, _, ktbl = key.partition(".")
+            dbs.add(sanitize(kdb))
+            tbls.add(sanitize(ktbl))  # undoes mapped_names' '_'→'-'
+        return sorted(
+            (d, t) for d in dbs for t in tbls if self.mapped_names(d, t) == target
+        )
+
     def data_specs(self) -> list[TableSpec]:
         return [s for s in self.specs.values() if not s.is_ddl]
 

@@ -2,10 +2,13 @@
 side-output router (R1-R4, java/processfunctions/mysql/SideInputProcessFunction.java:37-132
 and per-table sink loop FlinkCDCMulti.java:345-391).
 
-One envelope DataFrame in; for every registered table: filter its rows,
-project the JSON payload through that table's typed schema (T5 boundary),
-strip routing-only columns (:54-63), add the ``dt`` bucket (T7), and append
-to ``<sink>/<source_id>_<db>__<tbl>/dt=YYYY-MM-DD/``.
+The pieces streaming/pipeline.process_batch routes one (micro-)batch
+with: ``project_table`` filters a source identity's rows, projects the JSON
+payload through the table's typed schema (T5 boundary) and strips
+routing-only columns (:54-63); the caller adds the ``dt`` bucket (T7) and
+``publish_batch_parquet`` lands them exactly once under
+``<sink>/<source_id>_<db>__<tbl>/dt=YYYY-MM-DD/``; ``read_published``
+reads a table back across both publish modes.
 
 Scale notes:
 - The batch is persisted once and each table writer reuses it; with K tables
@@ -14,37 +17,23 @@ Scale notes:
 - Writes are per-table ``partitionBy("dt")`` appends; no global
   ``repartition(1)`` — per-record CDC order is recoverable from the offset
   columns (SURVEY.md §7.5), so writers parallelize freely.
-- Unknown-table detection is an aggregation over the distinct observed
-  (db, tbl) keys (a handful of rows), not a per-record check.
+- Unknown-table detection reads the batch's observed (db, tbl) set, a
+  handful of rows collected by the write job itself, not a per-record
+  check.
 """
 
 from __future__ import annotations
-
-from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from flink_cdc_multi_spark.catalog import TableRegistry, TableSpec
-from flink_cdc_multi_spark.functions.datetime_utils import dt_bucket
 
 
 class UnknownTableError(RuntimeError):
     """Record for a table not in the registry → job-failing error, matching
     SideInputProcessFunction.java:117-131 (README.md:160 notes a default-skip
     intent via fail.on.unknown.tables; both policies supported)."""
-
-
-@dataclass
-class RouteResult:
-    per_table_rows: dict[str, int] = field(default_factory=dict)
-    unknown_tables: list[tuple[str, str]] = field(default_factory=list)
-    ddl_rows: int = 0
-
-
-def observed_tables(envelope: DataFrame) -> list[tuple[str, str]]:
-    rows = envelope.select("_db", "_tbl").distinct().collect()
-    return [(r["_db"], r["_tbl"]) for r in rows]
 
 
 def keep_meta_cols(source_name: str) -> list[str]:
@@ -200,8 +189,8 @@ def publish_batch_parquet(typed: DataFrame, table_path: str,
             # this batch's rows were folded into a compacted rewrite
             # whose epoch never reached the checkpoint commit — replaying
             # the publish would duplicate them next to the image. The
-            # plan must still EXECUTE (noop sink): the one-pass streaming
-            # path rides its control-plane Observation on this job and
+            # plan must still EXECUTE (noop sink): the streaming batch
+            # body rides its control-plane Observation on this job and
             # would block forever on obs.get otherwise.
             typed.write.format("noop").mode("overwrite").save()
             return
@@ -287,7 +276,7 @@ def _publish_manifest(typed: DataFrame, table_path: str, batch_id) -> None:
     # can prune WHOLE BATCHES driver-side — the Iceberg-manifest pruning
     # shape; at 100 TB a dt-filtered read skips every non-overlapping
     # batch without touching a footer. Multiple observations per job
-    # compose (the one-pass control plane may ride this same write).
+    # compose (the streaming control plane may ride this same write).
     dt_stats = None
     if "dt" in typed.columns:
         from pyspark.sql import Observation
@@ -609,92 +598,3 @@ def _promote_staging(spark, table_path: str, staging: str,
         list(ex.map(mv, moves))  # drain: propagate the first failure
     _, sp = _hadoop_fs(spark, staging)
     fs.delete(sp, True)
-
-
-def route_batch(
-    envelope: DataFrame,
-    registry: TableRegistry,
-    sink_path: str,
-    source_id: str,
-    write: bool = True,
-    resolve_unknown=None,
-    counts: dict | None = None,
-    batch_id: int | str | None = None,
-) -> RouteResult:
-    """Demux one (micro-)batch to per-table parquet publishes.
-
-    ``counts``: precomputed ``{(db, tbl): n}`` for the batch (the streaming
-    pipeline already has it from its one-pass batch_summary); when None,
-    computed here with one grouped job.
-
-    ``batch_id``: when set, writes publish through the exactly-once
-    staging/promote path (publish_batch_parquet) so a replayed batch
-    never duplicates rows.
-    """
-    result = RouteResult()
-    # Cache ownership: if the caller already persisted the batch (as
-    # streaming/pipeline.process_batch does), don't persist/unpersist here —
-    # the finally-unpersist would evict the caller's cache mid-batch and
-    # force a recompute for its offset/status aggregations.
-    owns_cache = not envelope.is_cached
-    if owns_cache:
-        envelope = envelope.persist()
-    try:
-        # One pass for routing keys AND per-table counts (not K count jobs),
-        # then the unknown-table policy BEFORE any partial writes.
-        if counts is None:
-            counts = {
-                (r["_db"], r["_tbl"]): r["n"]
-                for r in envelope.groupBy("_db", "_tbl").agg(F.count("*").alias("n")).collect()
-            }
-        routed: list[tuple[str, str, TableSpec]] = []
-        for db, tbl in counts:
-            spec = registry.lookup(db, tbl)
-            if spec is None and resolve_unknown is not None:
-                # newly-added-table pickup (scanNewlyAddedTableEnabled,
-                # MySQLStreamer.java:302): ask the resolver (catalog
-                # introspection) for a spec and adopt it into the registry
-                spec = resolve_unknown(db, tbl)
-                if spec is not None:
-                    registry.add(spec)
-            if spec is None:
-                result.unknown_tables.append((db, tbl))
-            else:
-                routed.append((db, tbl, spec))
-        if result.unknown_tables and registry.fail_on_unknown_tables:
-            raise UnknownTableError(
-                f"unknown tables: {result.unknown_tables}; known: {sorted(registry.specs)}"
-            )
-
-        def _write_one(db: str, tbl: str, spec: TableSpec) -> None:
-            typed = project_table(envelope, registry, spec, db, tbl)
-            typed = typed.withColumn("dt", dt_bucket(F.col("_ts")))
-            publish_batch_parquet(
-                typed, f"{sink_path}/{source_id}_{spec.output_name}", batch_id
-            )
-
-        for db, tbl, spec in routed:
-            n = counts[(db, tbl)]
-            if spec.is_ddl:
-                result.ddl_rows += n
-            else:
-                result.per_table_rows[spec.key] = result.per_table_rows.get(spec.key, 0) + n
-
-        if write:
-            # Per-table writers are independent jobs over the cached batch —
-            # submit them concurrently and let the scheduler pack the cores
-            # (a K-table CDC stream shouldn't serialize K writes).
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(max_workers=min(8, max(1, len(routed)))) as ex:
-                futures = [
-                    ex.submit(_write_one, db, tbl, spec)
-                    for db, tbl, spec in routed
-                    if counts[(db, tbl)] > 0
-                ]
-                for f in futures:
-                    f.result()  # propagate the first failure
-        return result
-    finally:
-        if owns_cache:
-            envelope.unpersist()

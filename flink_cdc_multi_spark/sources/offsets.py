@@ -1,13 +1,14 @@
-"""Offset store: per-source offset reduction + single-file persistence +
-startup resume (reference ST4-ST7, W2, S6).
+"""Offset store: single-file persistence, monotone comparison and startup
+resume (reference ST4-ST7, W2, S6).
 
 The reference keeps the last-seen offset in keyed state and flushes it to a
 single overwritten text file on checkpoint-complete
 (BinlogOffsetStoreProcessFunction.java:33-80,
 SingleFileSinkFunction.java:31-39, read back at FlinkCDCMulti.java:187-257).
-Spark mapping: the micro-batch IS the checkpoint alignment — reduce the
-batch to one offset value with ``max_by`` (order-insensitive, SURVEY.md
-§7.5) and overwrite the file after the batch's writes commit. Contract
+Spark mapping: the micro-batch IS the checkpoint alignment — the batch is
+reduced to one offset value by the control-plane aggregates
+(streaming/pipeline.control_metric_aggs, riding the write job) and the
+file is overwritten after the batch's writes commit. Contract
 preserved: at-least-once, resume from the *starting* offset of the last
 transaction, duplicates tolerated downstream (README.md:212-218).
 
@@ -22,57 +23,11 @@ import re
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from flink_cdc_multi_spark.envelope import OP_READ
 from flink_cdc_multi_spark.sources import fsio
 
 # startup validation (MySQLStreamer.java:205-206, MongoDBStreamer.java:169)
 _MYSQL_OFFSET_RE = re.compile(r"^[^,]+,[0-9]+$")
 _NUMERIC_RE = re.compile(r"^[0-9]+$")
-
-
-def reduce_offset(envelope: DataFrame, source_type: str) -> str | None:
-    """One (micro-)batch → the offset string to persist, or None if the batch
-    carries no offset-bearing records (snapshot READs are skipped — they
-    have no binlog/LSN position, BinlogOffsetStoreProcessFunction.java:42-47;
-    DDL records DO carry offsets and count)."""
-    if source_type == "mysql":
-        rows = envelope.filter(
-            (F.col("_op").isNull() | (F.col("_op") != OP_READ))
-            & F.col("_binlog_file").isNotNull()
-        )
-        row = rows.agg(
-            F.max_by(
-                F.struct("_binlog_file", "_binlog_pos_end"),
-                F.struct("_binlog_file", "_binlog_pos_end"),
-            ).alias("o")
-        ).first()
-        if row is None or row["o"] is None:
-            return None
-        return f"{row['o']['_binlog_file']},{row['o']['_binlog_pos_end']}"
-    if source_type == "postgres":
-        row = envelope.filter(
-            (F.col("_op").isNull() | (F.col("_op") != OP_READ)) & F.col("_lsn").isNotNull()
-        ).agg(F.max("_lsn").alias("o")).first()
-        return None if row is None or row["o"] is None else str(row["o"])
-    if source_type == "oracle":
-        # ST7 emits _scn on change; batch equivalent: numerically-last SCN.
-        # try_cast: a malformed SCN string on one corrupt line must not
-        # ANSI-crash the whole offset reduction — it degrades to null and
-        # falls out of the max (same family as the tableChanges fuzz find)
-        row = (
-            envelope.filter(F.col("_scn").isNotNull() & (F.col("_scn") != "0"))
-            .agg(F.max(F.col("_scn").try_cast("decimal(38,0)")).alias("o"))
-            .first()
-        )
-        return None if row is None or row["o"] is None else str(row["o"])
-    if source_type == "mongodb":
-        row = (
-            envelope.filter(F.col("_op") != OP_READ)
-            .agg(F.max("_ts").alias("o"))
-            .first()
-        )
-        return None if row is None or row["o"] is None else str(row["o"])
-    raise ValueError(f"unknown source type: {source_type}")
 
 
 def offset_greater(a: str, b: str, source_type: str) -> bool:

@@ -63,7 +63,7 @@ comparison, so Spark's JDBC relation pushes it INTO the source query
 (``WHERE wm > ?`` — the database's index on the watermark column does the
 work; no full-table scan ships over the wire), and the chunked-snapshot
 split planner (sources/jdbc.py) still applies to the initial snapshot. Each
-poll is a bounded batch through the SAME envelope → route_batch → offset
+poll is a bounded batch through the SAME envelope → process_batch → offset
 path the streaming legs use; nothing downstream knows the transport
 changed.
 
@@ -189,7 +189,7 @@ def delta_to_envelope(
     source_type: str = "mysql",
 ) -> DataFrame:
     """Delta rows → change envelope (same wire shape as the streaming
-    decoder and snapshot_to_envelope, so route_batch/compaction/status are
+    decoder and snapshot_to_envelope, so routing/compaction/status are
     shared verbatim; the source's log-offset columns are null — a polled
     row has no binlog/LSN/SCN position, exactly like a snapshot READ, so
     the log-offset store correctly never advances from a poll). Insert-

@@ -1,8 +1,12 @@
 import sys
+from pathlib import Path
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+# the checkout this file lives in — never a fixed path, so a copy of the
+# repository tests its own tree
+REPO_ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(REPO_ROOT))
 
 from flink_cdc_multi_spark.session import get_spark
 
@@ -66,3 +70,19 @@ def make_mysql_ddl(
             "offset_pos": pos,
         }
     )
+
+
+def run_batch(env, registry, sink_path, source_id="s"):
+    """Route one decoded batch through ``CDCPipeline.process_batch`` — the
+    batch-mode entry the polling source uses."""
+    from flink_cdc_multi_spark.config import JobConfig
+    from flink_cdc_multi_spark.streaming.pipeline import CDCPipeline
+
+    cfg = JobConfig.from_dict(
+        {
+            "source.id": source_id,
+            "source.type": registry.source.name,
+            "sink.path": str(sink_path),
+        }
+    )
+    CDCPipeline(cfg, registry).process_batch(env, 0)

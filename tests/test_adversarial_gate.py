@@ -19,8 +19,9 @@ import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tools")
+from conftest import REPO_ROOT  # noqa: E402  (puts the repo on sys.path)
+
+sys.path.insert(0, str(REPO_ROOT / "tools"))
 
 from check_oracle import check_one, oracle_connection  # noqa: E402
 
@@ -211,7 +212,7 @@ ADVERSARIAL_QUERIES = [
 def adv_sf(tmp_path_factory):
     dst = str(tmp_path_factory.mktemp("adv") / "sf")
     subprocess.run(
-        [sys.executable, "/root/repo/tools/gen_adversarial_sf.py", SRC_SF, dst],
+        [sys.executable, str(REPO_ROOT / "tools" / "gen_adversarial_sf.py"), SRC_SF, dst],
         check=True,
         capture_output=True,
         timeout=300,

@@ -2,9 +2,7 @@
 the flag logic alone — the recheck wiring is exercised by bench runs, a
 synthetic-load test would be overkill per the verdict's own scoping."""
 
-import sys
-
-sys.path.insert(0, "/root/repo")
+from conftest import REPO_ROOT  # noqa: F401  (puts the repo on sys.path)
 
 from bench import ambient_disagreement
 

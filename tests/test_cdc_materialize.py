@@ -5,7 +5,7 @@ import json
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from conftest import make_mysql_row
+from conftest import make_mysql_row, run_batch
 
 from flink_cdc_multi_spark.catalog import TableRegistry
 from flink_cdc_multi_spark.operators.cdc import (
@@ -14,7 +14,6 @@ from flink_cdc_multi_spark.operators.cdc import (
     recover_compact_swap,
     streaming_dedup,
 )
-from flink_cdc_multi_spark.operators.routing import route_batch
 from flink_cdc_multi_spark.sources.debezium_json import decode_raw
 
 USERS = T.StructType(
@@ -28,7 +27,7 @@ def _write_changes(spark, tmp_path, lines):
         spark.createDataFrame([(line,) for line in lines], "value string"), "mysql"
     )
     reg = TableRegistry.build("mysql", {("testdb", "users"): USERS})
-    route_batch(env, reg, str(tmp_path), "s")
+    run_batch(env, reg, tmp_path, "s")
     return str(tmp_path / "s_testdb__users")
 
 
@@ -374,7 +373,7 @@ def test_maintain_group_agg_over_real_envelope_tables(spark, tmp_path):
         env = decode_raw(
             spark.createDataFrame([(ln,) for ln in lines], "value string"), "mysql"
         )
-        route_batch(env, reg, str(where), "s")
+        run_batch(env, reg, where, "s")
         return str(where / "s_testdb__users")
 
     b1 = [

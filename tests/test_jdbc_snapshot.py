@@ -4,8 +4,9 @@ read (no database in this container)."""
 
 from pyspark.sql import types as T
 
+from conftest import run_batch
+
 from flink_cdc_multi_spark.catalog import TableRegistry
-from flink_cdc_multi_spark.operators.routing import route_batch
 from flink_cdc_multi_spark.sources.jdbc import (
     DEFAULT_SPLIT_SIZE,
     SplitPlan,
@@ -55,8 +56,7 @@ def test_snapshot_envelope_routes_like_stream(spark, tmp_path):
             [T.StructField("id", T.LongType()), T.StructField("name", T.StringType())]
         )},
     )
-    res = route_batch(env, reg, str(tmp_path), "snap")
-    assert res.per_table_rows == {"shop.users": 3}
+    run_batch(env, reg, tmp_path, "snap")
     out = spark.read.parquet(str(tmp_path / "snap_shop__users"))
     assert sorted(r["id"] for r in out.collect()) == [1, 2, 3]
     assert {r["_op"] for r in out.collect()} == {"READ"}

@@ -7,15 +7,23 @@ from conftest import make_mysql_ddl, make_mysql_row
 from flink_cdc_multi_spark.sources.debezium_json import decode_raw
 from flink_cdc_multi_spark.sources.offsets import (
     OffsetFileStore,
-    reduce_offset,
     resume_filter,
     validate_offset,
 )
+from flink_cdc_multi_spark.streaming.pipeline import _offset_str, control_metric_aggs
 
 
 def _envelope(spark, lines, source_type="mysql"):
     df = spark.createDataFrame([(line,) for line in lines], "value string")
     return decode_raw(df, source_type)
+
+
+def _batch_offset(envelope, source_type):
+    """The batch's offset string exactly as the pipeline computes it: the
+    control-plane aggregates (observed on the write job in production)
+    folded by _offset_str."""
+    row = envelope.agg(*control_metric_aggs(source_type)).first()
+    return _offset_str(row["offset"], source_type)
 
 
 def test_mysql_offset_skips_snapshot_reads(spark):
@@ -27,18 +35,18 @@ def test_mysql_offset_skips_snapshot_reads(spark):
     ]
     env = _envelope(spark, lines)
     env = env.filter(env._binlog_file != "")  # blank offsets on READs (B1)
-    assert reduce_offset(env, "mysql") == "mysql-bin.000002,100"
+    assert _batch_offset(env, "mysql") == "mysql-bin.000002,100"
 
 
 def test_mysql_offset_none_when_only_reads(spark):
     lines = [make_mysql_row(op="r", after={"id": 1}, snapshot="true")]
     # READs are excluded regardless of carried file/pos
-    assert reduce_offset(_envelope(spark, lines), "mysql") is None
+    assert _batch_offset(_envelope(spark, lines), "mysql") is None
 
 
 def test_ddl_rows_carry_offsets(spark):
     lines = [make_mysql_ddl(pos=7777)]
-    assert reduce_offset(_envelope(spark, lines), "mysql") == "mysql-bin.000001,7777"
+    assert _batch_offset(_envelope(spark, lines), "mysql") == "mysql-bin.000001,7777"
 
 
 def test_postgres_lsn_max(spark):
@@ -53,7 +61,7 @@ def test_postgres_lsn_max(spark):
                     "source": {"db": "d", "schema": "public", "table": "t", "lsn": 999,
                                 "snapshot": "true"}}),
     ]
-    assert reduce_offset(_envelope(spark, lines, "postgres"), "postgres") == "250"
+    assert _batch_offset(_envelope(spark, lines, "postgres"), "postgres") == "250"
 
 
 def test_oracle_scn_numeric_max(spark):
@@ -65,7 +73,7 @@ def test_oracle_scn_numeric_max(spark):
     )
     env = _envelope(spark, [mk("99"), mk("100")], "oracle")
     # numeric, not lexicographic: 100 > 99
-    assert reduce_offset(env, "oracle") == "100"
+    assert _batch_offset(env, "oracle") == "100"
 
 
 def test_mongo_ts_max_non_read(spark):
@@ -76,7 +84,7 @@ def test_mongo_ts_max_non_read(spark):
          "source": {"db": "d", "collection": "c", "snapshot": snap}}
     )
     env = _envelope(spark, [mk("INSERT", 5, "true"), mk("INSERT", 3, "false")], "mongodb")
-    assert reduce_offset(env, "mongodb") == "3"  # snapshot INSERT→READ skipped
+    assert _batch_offset(env, "mongodb") == "3"  # snapshot INSERT→READ skipped
 
 
 def test_offset_file_roundtrip(tmp_path):
@@ -214,6 +222,6 @@ def test_oracle_malformed_scn_degrades_not_crashes(spark):
          "source": {"db": "d", "schema": "s", "table": "t", "scn": scn}}
     )
     env = _envelope(spark, [mk("99"), mk("garbage"), mk("120")], "oracle")
-    assert reduce_offset(env, "oracle") == "120"
+    assert _batch_offset(env, "oracle") == "120"
     kept = sorted(r["_scn"] for r in resume_filter(env, "oracle", "100").collect())
     assert kept == ["120", "garbage"]  # 99 dropped; unknown position kept

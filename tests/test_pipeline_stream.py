@@ -12,7 +12,11 @@ from conftest import make_mysql_ddl, make_mysql_row
 
 from flink_cdc_multi_spark.catalog import TableRegistry
 from flink_cdc_multi_spark.config import JobConfig
-from flink_cdc_multi_spark.streaming.pipeline import CDCPipeline, StopController
+from flink_cdc_multi_spark.streaming.pipeline import (
+    CDCPipeline,
+    StopController,
+    registry_from_config,
+)
 
 USERS = T.StructType(
     [T.StructField("id", T.LongType()), T.StructField("v", T.StringType())]
@@ -31,10 +35,8 @@ def _pipeline(tmp_path, tables=None, **cfg_overrides):
             **cfg_overrides,
         }
     )
-    reg = TableRegistry.build(
-        "mysql",
-        tables if tables is not None else {("testdb", "users"): USERS},
-        fail_on_unknown_tables=cfg.fail_on_unknown_tables,
+    reg = registry_from_config(
+        cfg, tables if tables is not None else {("testdb", "users"): USERS}
     )
     return CDCPipeline(cfg, reg)
 
@@ -566,27 +568,11 @@ def test_maintenance_compaction_every_n_batches(spark, tmp_path):
     assert pipe.offset_store.read() == "mysql-bin.000001,40"
 
 
-# -- one-pass (observed-metrics) batch path ---------------------------------
-
-
-def test_onepass_eligibility_gates(tmp_path):
-    assert _pipeline(tmp_path)._onepass_eligible() is True
-    assert _pipeline(tmp_path, **{"snapshot.only": "true"})._onepass_eligible() is False
-    assert _pipeline(tmp_path, **{"debug": "true"})._onepass_eligible() is False
-    assert (
-        _pipeline(tmp_path, **{"streaming.onepass.max.tables": 0})._onepass_eligible()
-        is False
-    )
-    many = {("testdb", f"t{i}"): USERS for i in range(17)}
-    assert _pipeline(tmp_path, tables=many)._onepass_eligible() is False
-    mapped = _pipeline(tmp_path)
-    mapped.registry.table_name_map["testdb.users"] = "users_v2"
-    assert mapped._onepass_eligible() is False
+# -- the batch body (observed-metrics control plane) ------------------------
 
 
 def test_onepass_unknown_table_skip_policy(spark, tmp_path):
     pipe = _pipeline(tmp_path, **{"fail.on.unknown.tables": "false"})
-    assert pipe._onepass_eligible()
     feed = _feed(
         tmp_path,
         "f1.json",
@@ -629,7 +615,6 @@ def test_onepass_multi_table_batch(spark, tmp_path):
     pipe = _pipeline(
         tmp_path, tables={("testdb", "users"): USERS, ("testdb", "orders"): orders}
     )
-    assert pipe._onepass_eligible()
     feed = _feed(
         tmp_path,
         "f1.json",
@@ -654,8 +639,9 @@ def test_onepass_multi_table_batch(spark, tmp_path):
 
 
 def test_onepass_matches_general_path(spark, tmp_path):
-    """Equivalence: the one-job observed-metrics path and the two-pass
-    general path must land identical table contents, offsets, and status."""
+    """Pinned results of one mixed batch (READ/c/u/d rows plus a DDL):
+    table contents, DDL rows, offset and status — the values the two-pass
+    batch body landed before it was folded into this one."""
     lines = [
         make_mysql_row(op="r", after={"id": 1, "v": "a"}, snapshot="true", pos=1),
         make_mysql_row(op="c", after={"id": 2, "v": "b"}, pos=100, ts_ms=1700000001000),
@@ -665,44 +651,37 @@ def test_onepass_matches_general_path(spark, tmp_path):
                        pos=300, ts_ms=1700000003000),
         make_mysql_ddl(ddl="CREATE INDEX i ON users (id)", pos=400),
     ]
-    results = {}
-    for label, overrides in [
-        ("onepass", {}),
-        ("general", {"streaming.onepass.max.tables": 0}),
-    ]:
-        sub = tmp_path / label
-        sub.mkdir()
-        pipe = _pipeline(sub, **overrides)
-        feed = _feed(sub, "f1.json", lines)
-        query = pipe.start(spark, feed, str(sub / "ckpt"))
-        query.processAllAvailable()
-        query.stop()
-        users = spark.read.parquet(str(sub / "sink" / "s1_testdb__users"))
-        ddl_out = spark.read.parquet(str(sub / "sink" / "s1_testdb___testdb_ddl"))
-        results[label] = {
-            "users": sorted(
-                (r["id"], r["v"], r["_op"], r["_ts"], r["_binlog_pos_internal"])
-                for r in users.collect()
-            ),
-            "ddl": sorted((r["_ddl"], r["_ts"]) for r in ddl_out.collect()),
-            "offset": pipe.offset_store.read(),
-            "status": (
-                json.loads((sub / "store" / "s1_status.json").read_text())["record_count"],
-                json.loads((sub / "store" / "s1_status.json").read_text())[
-                    "last_event_timestamp"
-                ],
-            ),
-        }
-    assert results["onepass"] == results["general"]
+    pipe = _pipeline(tmp_path)
+    feed = _feed(tmp_path, "f1.json", lines)
+    query = pipe.start(spark, feed, str(tmp_path / "ckpt"))
+    query.processAllAvailable()
+    query.stop()
+    users = spark.read.parquet(str(tmp_path / "sink" / "s1_testdb__users"))
+    ddl_out = spark.read.parquet(str(tmp_path / "sink" / "s1_testdb___testdb_ddl"))
+    assert sorted(
+        (r["id"], r["v"], r["_op"], r["_ts"], r["_binlog_pos_internal"])
+        for r in users.collect()
+    ) == [
+        (1, "a", "DELETE", 1700000003000, 300),
+        (1, "a", "READ", 1700000000000, 1),
+        (2, "b", "INSERT", 1700000001000, 100),
+        (2, "c", "UPDATE", 1700000002000, 200),
+    ]
+    assert sorted((r["_ddl"], r["_ts"]) for r in ddl_out.collect()) == [
+        ("CREATE INDEX i ON users (id)", 1700000000000)
+    ]
+    assert pipe.offset_store.read() == "mysql-bin.000001,400"
+    status = json.loads((tmp_path / "store" / "s1_status.json").read_text())
+    assert (status["record_count"], status["last_event_timestamp"]) == (
+        5, 1700000003000
+    )
 
 
 @pytest.mark.parametrize("n_tables", [24, 64])
 def test_onepass_matches_general_path_many_tables(spark, tmp_path, n_tables):
-    """Result-equivalence at the widths the r6 crossover sweep measured
-    (tools/sweep_onepass.py, PERF.md): the one-pass path forced ABOVE the
-    shipped 16-table default must still land identical tables + offset +
-    status as the general path — the default is a perf knob, not a
-    correctness boundary."""
+    """The widths the r6 crossover sweep measured (PERF.md), above the
+    former 16-table limit of the one-pass body: every table lands exactly
+    its 2 rows and the offset is the batch maximum."""
     lines = [
         make_mysql_row(
             op="c",
@@ -714,36 +693,125 @@ def test_onepass_matches_general_path_many_tables(spark, tmp_path, n_tables):
         for i in range(2 * n_tables)
     ]
     tables = {("testdb", f"t{i}"): USERS for i in range(n_tables)}
-    results = {}
-    for label, overrides in [
-        ("onepass", {"streaming.onepass.max.tables": 999}),
-        ("general", {"streaming.onepass.max.tables": 0}),
-    ]:
-        sub = tmp_path / label
-        sub.mkdir()
-        pipe = _pipeline(sub, tables=tables, **overrides)
-        feed = _feed(sub, "f1.json", lines)
-        query = pipe.start(spark, feed, str(sub / "ckpt"))
-        query.processAllAvailable()
-        query.stop()
-        per_table = {}
-        for i in range(n_tables):
-            rows = spark.read.parquet(str(sub / "sink" / f"s1_testdb__t{i}"))
-            per_table[i] = sorted(
-                (r["id"], r["v"], r["_op"], r["_binlog_pos_internal"])
-                for r in rows.collect()
-            )
-        results[label] = {
-            "tables": per_table,
-            "offset": pipe.offset_store.read(),
-            "onepass_used": pipe._onepass_eligible(),
-        }
-    assert results["onepass"]["onepass_used"] is True
-    assert results["general"]["onepass_used"] is False
-    assert results["onepass"]["tables"] == results["general"]["tables"]
-    assert results["onepass"]["offset"] == results["general"]["offset"]
-    # every table got its 2 rows on both paths
-    assert all(len(v) == 2 for v in results["onepass"]["tables"].values())
+    pipe = _pipeline(tmp_path, tables=tables)
+    feed = _feed(tmp_path, "f1.json", lines)
+    query = pipe.start(spark, feed, str(tmp_path / "ckpt"))
+    query.processAllAvailable()
+    query.stop()
+    for i in range(n_tables):
+        rows = spark.read.parquet(str(tmp_path / "sink" / f"s1_testdb__t{i}"))
+        assert sorted(
+            (r["id"], r["v"], r["_op"], r["_binlog_pos_internal"])
+            for r in rows.collect()
+        ) == [
+            (j, f"v{j}", "INSERT", 100 + j) for j in (i, i + n_tables)
+        ]
+    assert pipe.offset_store.read() == f"mysql-bin.000001,{100 + 2 * n_tables - 1}"
+
+
+def _decoded(spark, lines):
+    from flink_cdc_multi_spark.sources.debezium_json import decode_raw
+
+    return decode_raw(
+        spark.createDataFrame([(line,) for line in lines], "value string"), "mysql"
+    )
+
+
+def _jobs_run_by(spark, fn) -> int:
+    """Spark jobs submitted while ``fn`` runs (the global job-id counter:
+    pool-thread writes carry no job group)."""
+    sched = spark.sparkContext._jsc.sc().dagScheduler()
+    j0 = sched.nextJobId()
+    fn()
+    return sched.nextJobId() - j0
+
+
+@pytest.mark.parametrize(
+    "case",
+    ["single", "table_name_map", "database_name_map", "snapshot_only", "k_tables"],
+)
+def test_jobs_per_batch_at_floor(spark, tmp_path, case):
+    """One Spark job per data table per micro-batch: the control plane
+    (counts, max ts, observed tables, offset, DDL slice) rides the write
+    job as observed metrics — also under name maps (one or several source
+    identities per table) and in snapshot-only mode."""
+    overrides, tables, k = {}, None, 1
+    lines = [
+        make_mysql_row(op="c", after={"id": i, "v": "x"}, pos=10 + i)
+        for i in range(3)
+    ]
+    if case == "table_name_map":
+        overrides = {"table.name.map": {"testdb.users": "users_v2"}}
+        tables = {("testdb", "users_v2"): USERS}
+    elif case == "database_name_map":
+        overrides = {"database.name.map": {"shard1": "prod", "shard2": "prod"}}
+        tables = {("prod", "users"): USERS}
+        lines = [
+            make_mysql_row(db=f"shard{i % 2 + 1}", op="c", after={"id": i}, pos=10 + i)
+            for i in range(4)
+        ]
+    elif case == "snapshot_only":
+        overrides = {"snapshot.only": "true"}
+    elif case == "k_tables":
+        k = 3
+        tables = {("testdb", f"t{i}"): USERS for i in range(k)}
+        lines = [
+            make_mysql_row(table=f"t{i % k}", op="c", after={"id": i}, pos=10 + i)
+            for i in range(2 * k)
+        ]
+    pipe = _pipeline(tmp_path, tables=tables, **overrides)
+    env = _decoded(spark, lines)
+    assert _jobs_run_by(spark, lambda: pipe.process_batch(env, 0)) == k
+    assert pipe.status.record_count == len(lines)
+    assert pipe.offset_store.read() == f"mysql-bin.000001,{10 + len(lines) - 1}"
+
+
+@pytest.mark.parametrize("mode", ["rename", "manifest"])
+def test_many_to_one_name_map_publishes_once(spark, tmp_path, monkeypatch, mode):
+    """A database.name.map merging two shards into one target publishes
+    the target ONCE per batch over both shards' rows. Two publishes of one
+    table path under one batch key would share a staging dir: the batch
+    raised FileNotFoundException or left an empty, unreadable table. The
+    same rule holds for a table adopted mid-run (catch-up write) and for
+    the merged databases' DDL rows."""
+    from flink_cdc_multi_spark.operators.routing import read_published
+
+    monkeypatch.setenv("SPARK_GRAFT_PUBLISH_MODE", mode)
+    orders = T.StructType([T.StructField("oid", T.LongType())])
+    pipe = _pipeline(
+        tmp_path,
+        tables={("prod", "users"): USERS},
+        **{"database.name.map": {"shard1": "prod", "shard2": "prod"},
+           "scan.newly.added.tables": "true"},
+    )
+    pipe.schema_provider = lambda db, tbl: orders if tbl == "orders" else None
+    lines = [
+        make_mysql_row(db=f"shard{s}", op="c", after={"id": i, "v": f"s{s}"},
+                       pos=1000 * s + i)
+        for s in (1, 2)
+        for i in range(50)
+    ] + [
+        make_mysql_row(db=f"shard{s}", table="orders", op="c",
+                       after={"oid": 10 * s + i}, pos=5000 + 10 * s + i)
+        for s in (1, 2)
+        for i in range(2)
+    ] + [
+        make_mysql_ddl(db=f"shard{s}", ddl="CREATE INDEX i ON users (id)",
+                       pos=9000 + s)
+        for s in (1, 2)
+    ]
+    pipe.process_batch(_decoded(spark, lines), 0)
+    sink = tmp_path / "sink"
+    users = read_published(spark, str(sink / "s1_prod__users")).collect()
+    assert sorted((r["v"], r["id"]) for r in users) == sorted(
+        (f"s{s}", i) for s in (1, 2) for i in range(50)
+    )
+    out = read_published(spark, str(sink / "s1_prod__orders")).collect()
+    assert sorted(r["oid"] for r in out) == [10, 11, 20, 21]
+    assert "prod.orders" in pipe.registry.specs
+    ddl = read_published(spark, str(sink / "s1_prod___prod_ddl")).collect()
+    assert sorted(r["_binlog_pos_end"] for r in ddl) == [9001, 9002]
+    assert pipe.offset_store.read() == "mysql-bin.000001,9002"
 
 
 def test_schema_change_reversion_lifecycle(spark, tmp_path):
@@ -808,7 +876,7 @@ def test_schema_change_reversion_lifecycle(spark, tmp_path):
 
 
 def test_mongo_stream_onepass_end_to_end(spark, tmp_path):
-    """MongoDB source through the streaming one-pass path: change-stream
+    """MongoDB source through the streaming batch body: change-stream
     shaped lines → typed per-collection parquet with _id/_txn_op_index
     meta, timestamp offset store, resume semantics."""
     import json as _json
@@ -844,7 +912,6 @@ def test_mongo_stream_onepass_end_to_end(spark, tmp_path):
         "mongodb", {("shop", "items"): docs_schema}, with_ddl_tables=False
     )
     pipe = CDCPipeline(cfg, reg)
-    assert pipe._onepass_eligible()
     feed = _feed(
         tmp_path,
         "f1.json",
@@ -920,13 +987,12 @@ def test_start_recovers_crashed_compaction_swap(spark, tmp_path):
 
 def test_onepass_no_empty_dir_for_inactive_table(spark, tmp_path):
     """A registered table with no rows in the batch must not leave a
-    schema-less (_SUCCESS-only) parquet dir behind — parity with the
-    general path, which skips zero-count tables."""
+    schema-less (_SUCCESS-only) parquet dir behind: readers and
+    compaction break on it."""
     orders = T.StructType([T.StructField("oid", T.LongType())])
     pipe = _pipeline(
         tmp_path, tables={("testdb", "users"): USERS, ("testdb", "orders"): orders}
     )
-    assert pipe._onepass_eligible()
     feed = _feed(
         tmp_path,
         "f1.json",

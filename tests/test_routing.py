@@ -1,12 +1,15 @@
-"""route_batch: demux to per-table parquet, name maps, unknown-table policy."""
+"""Per-table routing through CDCPipeline.process_batch: demux to per-table
+parquet, name maps, unknown-table policy, per-source DDL tables."""
+
+import logging
 
 import pytest
 from pyspark.sql import types as T
 
-from conftest import make_mysql_ddl, make_mysql_row
+from conftest import make_mysql_ddl, make_mysql_row, run_batch
 
 from flink_cdc_multi_spark.catalog import TableRegistry
-from flink_cdc_multi_spark.operators.routing import UnknownTableError, route_batch
+from flink_cdc_multi_spark.operators.routing import UnknownTableError
 from flink_cdc_multi_spark.sources.debezium_json import decode_raw
 
 USERS = T.StructType(
@@ -43,8 +46,7 @@ def test_demux_writes_per_table(spark, tmp_path):
         make_mysql_row(table="orders", op="c", after={"id": 7, "amount": 3.5}, pos=30),
     ]
     reg = _registry()
-    res = route_batch(_envelope(spark, lines), reg, str(tmp_path), "src1")
-    assert res.per_table_rows == {"testdb.users": 2, "testdb.orders": 1}
+    run_batch(_envelope(spark, lines), reg, tmp_path, "src1")
 
     users = spark.read.parquet(str(tmp_path / "src1_testdb__users"))
     assert users.count() == 2
@@ -57,6 +59,7 @@ def test_demux_writes_per_table(spark, tmp_path):
     assert str(users.select("dt").distinct().first()["dt"]) == "2023-11-14"
 
     orders = spark.read.parquet(str(tmp_path / "src1_testdb__orders"))
+    assert orders.count() == 1
     assert orders.select("amount").first()["amount"] == 3.5
 
 
@@ -65,9 +68,9 @@ def test_ddl_routed_to_ddl_table(spark, tmp_path):
         make_mysql_row(table="users", op="c", after={"id": 1, "name": "a"}),
         make_mysql_ddl(ddl="CREATE INDEX i ON users (id)", table="users", pos=99),
     ]
-    res = route_batch(_envelope(spark, lines), _registry(), str(tmp_path), "s")
-    assert res.ddl_rows == 1
+    run_batch(_envelope(spark, lines), _registry(), tmp_path, "s")
     ddl = spark.read.parquet(str(tmp_path / "s_testdb___testdb_ddl"))
+    assert ddl.count() == 1
     row = ddl.first()
     assert row["_ddl"].startswith("CREATE INDEX")
     assert row["_ddl_tbl"] == "users"
@@ -77,18 +80,21 @@ def test_ddl_routed_to_ddl_table(spark, tmp_path):
 def test_unknown_table_fails(spark, tmp_path):
     lines = [make_mysql_row(table="ghost", op="c", after={"id": 1})]
     with pytest.raises(UnknownTableError):
-        route_batch(_envelope(spark, lines), _registry(), str(tmp_path), "s")
+        run_batch(_envelope(spark, lines), _registry(), tmp_path, "s")
 
 
-def test_unknown_table_skip_policy(spark, tmp_path):
+def test_unknown_table_skip_policy(spark, tmp_path, caplog):
     lines = [
         make_mysql_row(table="ghost", op="c", after={"id": 1}),
         make_mysql_row(table="users", op="c", after={"id": 1, "name": "a"}),
     ]
     reg = _registry(fail_on_unknown_tables=False)
-    res = route_batch(_envelope(spark, lines), reg, str(tmp_path), "s")
-    assert res.unknown_tables == [("testdb", "ghost")]
-    assert res.per_table_rows == {"testdb.users": 1}
+    with caplog.at_level(logging.WARNING):
+        run_batch(_envelope(spark, lines), reg, tmp_path, "s")
+    assert "unknown tables skipped: [('testdb', 'ghost')]" in caplog.text
+    assert spark.read.parquet(str(tmp_path / "s_testdb__users")).count() == 1
+    assert not (tmp_path / "s_testdb__ghost").exists()
+    assert not (tmp_path / "s_testdb__orders").exists()
 
 
 def test_table_name_map(spark, tmp_path):
@@ -100,9 +106,9 @@ def test_table_name_map(spark, tmp_path):
         table_name_map={"testdb.users": "users_v2"},
     )
     lines = [make_mysql_row(table="users", op="c", after={"id": 5, "name": "x"})]
-    res = route_batch(_envelope(spark, lines), reg, str(tmp_path), "s")
-    assert res.per_table_rows == {"testdb.users_v2": 1}
+    run_batch(_envelope(spark, lines), reg, tmp_path, "s")
     assert spark.read.parquet(str(tmp_path / "s_testdb__users_v2")).count() == 1
+    assert not (tmp_path / "s_testdb__users").exists()
 
 
 def test_database_name_map(spark, tmp_path):
@@ -112,8 +118,9 @@ def test_database_name_map(spark, tmp_path):
         database_name_map={"testdb": "prod_db"},
     )
     lines = [make_mysql_row(db="testdb", table="users", op="c", after={"id": 1, "name": "a"})]
-    res = route_batch(_envelope(spark, lines), reg, str(tmp_path), "s")
-    assert res.per_table_rows == {"prod_db.users": 1}
+    run_batch(_envelope(spark, lines), reg, tmp_path, "s")
+    assert spark.read.parquet(str(tmp_path / "s_prod_db__users")).count() == 1
+    assert not (tmp_path / "s_testdb__users").exists()
 
 
 def test_oracle_all_string_projection_flattens_nested(spark, tmp_path):
@@ -142,9 +149,10 @@ def test_oracle_all_string_projection_flattens_nested(spark, tmp_path):
         ]
     )
     reg = TableRegistry.build("oracle", {("ORCL", "ITEMS"): schema})
-    res = route_batch(env, reg, str(tmp_path), "o")
-    assert res.per_table_rows == {"ORCL.ITEMS": 1}
-    row = spark.read.parquet(str(tmp_path / "o_ORCL__ITEMS")).first()
+    run_batch(env, reg, tmp_path, "o")
+    items = spark.read.parquet(str(tmp_path / "o_ORCL__ITEMS"))
+    assert items.count() == 1
+    row = items.first()
     assert row["ID"] == "7"
     assert row["PRICE"] == "12.345"
     assert row["ACTIVE"] is True  # the lone typed exception (BOOLEAN)
@@ -167,9 +175,9 @@ def test_postgres_ddl_routed_with_lsn(spark, tmp_path):
     df = spark.createDataFrame([(line,)], "value string")
     env = decode_raw(df, "postgres")
     reg = TableRegistry.build("postgres", {("pgdb", "users"): USERS})
-    res = route_batch(env, reg, str(tmp_path), "s")
-    assert res.ddl_rows == 1
+    run_batch(env, reg, tmp_path, "s")
     ddl = spark.read.parquet(str(tmp_path / "s_pgdb___pgdb_ddl"))
+    assert ddl.count() == 1
     row = ddl.first()
     assert row["_ddl"].startswith("ALTER TABLE")
     assert row["_lsn"] == 12345
@@ -191,7 +199,7 @@ def test_oracle_ddl_routed_ts_only(spark, tmp_path):
     df = spark.createDataFrame([(line,)], "value string")
     env = decode_raw(df, "oracle")
     reg = TableRegistry.build("oracle", {("ORCL", "USERS"): USERS})
-    res = route_batch(env, reg, str(tmp_path), "s")
-    assert res.ddl_rows == 1
+    run_batch(env, reg, tmp_path, "s")
     ddl = spark.read.parquet(str(tmp_path / "s_ORCL___ORCL_ddl"))
+    assert ddl.count() == 1
     assert set(ddl.columns) == {"_ddl", "_ddl_tbl", "_ts", "dt"}

@@ -13,10 +13,11 @@ from __future__ import annotations
 
 import sys
 from datetime import datetime, timezone
+from pathlib import Path
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from flink_cdc_multi_spark import TABLES  # noqa: E402
 from flink_cdc_multi_spark.session import get_spark  # noqa: E402

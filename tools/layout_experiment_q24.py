@@ -6,7 +6,7 @@ q24's 1 GB date-pruned scan of a SINGLE 15-row-group parquet file (scan
 parallelism capped at 15 of 32 cores) and (b) q25's statically-planned
 lineitem exchange. This experiment isolates the LAYOUT variable: rewrite
 lineitem as a dt=YYYY-MM hive-partitioned dataset (the engine's own sink
-layout — route_batch writes dt= partitions), then interleave-time the
+layout — the pipeline publishes dt= partitions), then interleave-time the
 same logical q24/q25 plans on both layouts in one session, min-of-3.
 
     python tools/layout_experiment_q24.py /tmp/sf10 /tmp/sf10_li_dt

@@ -15,8 +15,9 @@ import io
 import re
 import sys
 from contextlib import redirect_stdout
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from flink_cdc_multi_spark.plans import ALL_ORACLE_SQL, ALL_QUERIES  # noqa: E402
 from flink_cdc_multi_spark.session import get_spark  # noqa: E402
@@ -112,7 +113,7 @@ def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     spark = get_spark("plan-report", master="local[4]", shuffle_partitions=4)
     text = generate(spark, sf_dir)
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(Path(__file__).resolve().parents[1] / "PLANS.md", "w") as f:
         f.write(text)
     print(f"wrote PLANS.md ({len(text)} chars)")
 
