@@ -11,9 +11,11 @@ routing-only columns (:54-63); the caller adds the ``dt`` bucket (T7) and
 reads a table back across both publish modes.
 
 Scale notes:
-- The batch is persisted once and each table writer reuses it; with K tables
-  this is K column-pruned passes over an in-memory columnar batch, not K
-  re-reads of the source.
+- With K tables the batch is persisted once and every table writer reads
+  the cache, not the source. The first writer keeps the batch's N
+  partitions (its tasks decode the batch and fill the cache); writers
+  2..K each keep ~1/K of the rows and read ``coalesce(ceil(N/K))``, so a
+  batch runs N + (K-1)*ceil(N/K) tasks, not K*N.
 - Writes are per-table ``partitionBy("dt")`` appends; no global
   ``repartition(1)`` — per-record CDC order is recoverable from the offset
   columns (SURVEY.md §7.5), so writers parallelize freely.

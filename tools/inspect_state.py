@@ -23,8 +23,9 @@ from __future__ import annotations
 import json
 import os
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from flink_cdc_multi_spark.sources.offsets import validate_offset  # noqa: E402
 
